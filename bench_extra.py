@@ -28,18 +28,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-
-def _cpu_ticks() -> tuple[int, int]:
-    with open("/proc/stat") as f:
-        parts = f.readline().split()
-    vals = [int(x) for x in parts[1:]]
-    steal = vals[7] if len(vals) > 7 else 0
-    return steal, sum(vals)
-
-
-def _steal_pct(before: tuple[int, int], after: tuple[int, int]) -> float:
-    dt = after[1] - before[1]
-    return round(100.0 * (after[0] - before[0]) / dt, 2) if dt > 0 else 0.0
+from bench import _cpu_ticks, _steal_pct  # noqa: E402
 
 
 def main() -> None:

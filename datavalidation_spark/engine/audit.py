@@ -9,10 +9,11 @@ behind the same AuditLog interface):
     <audit_dir>/violations/  violation rows (+ run_id)
     <audit_dir>/_commits/    atomic commit manifests (manifest backend)
 
-Resume = anti-join the input's partition ids against already-recorded
+Resume = filter the input's partition ids against already-recorded
 verdicts for the same (rule_version, snapshot_id) — an application-level
-partition filter (SURVEY.md §4 "custom rules actually needed" (b)), so a
-killed job never recomputes a validated partition.
+partition filter (SURVEY.md §4 "custom rules actually needed" (b)) that
+Spark prunes at the scan of a partitioned input, so a killed job never
+recomputes or rereads a validated partition.
 
 Lineage columns per verdict: run_id, rule_version, snapshot_id (caller-
 provided source snapshot, e.g. Iceberg snapshot-id), input_manifest (source
@@ -24,7 +25,8 @@ from __future__ import annotations
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import StorageLevel
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from datavalidation_spark.engine.validate import ValidationResult, validate_documents
@@ -144,41 +146,55 @@ class AuditLog:
         input_manifest: str,
         run_ts: float | None = None,
     ) -> None:
-        """Record verdicts (with lineage) and violations for one run."""
+        """Record verdicts (with lineage) and violations for one run.
+
+        ``result.verdicts`` aggregates ``result.violations``, so the two
+        table writes would each compute the whole validation plan (rules,
+        the global duplicate scan, the referential anti-join). The
+        violations are persisted for the length of the commit and read by
+        both writes, then released; a cache the caller already holds on
+        them is left in place."""
         ts = run_ts if run_ts is not None else time.time()
-        verdicts = result.verdicts.withColumns(
-            {
-                "run_id": F.lit(run_id),
-                "rule_version": F.lit(rule_version),
-                "snapshot_id": F.lit(snapshot_id),
-                "input_manifest": F.lit(input_manifest),
-                "validated_at": F.lit(ts),
-            }
-        )
-        violations = result.violations.withColumn("run_id", F.lit(run_id))
-        if self.backend == "manifest":
-            self.manifest.commit(
-                {"violations": violations, "verdicts": verdicts},
-                meta={
-                    "run_id": run_id,
-                    "rule_version": rule_version,
-                    "snapshot_id": snapshot_id,
-                    "input_manifest": input_manifest,
-                    "validated_at": ts,
-                },
+        owned = result.violations.storageLevel == StorageLevel.NONE
+        if owned:
+            result.violations.persist()
+        try:
+            verdicts = result.verdicts.withColumns(
+                {
+                    "run_id": F.lit(run_id),
+                    "rule_version": F.lit(rule_version),
+                    "snapshot_id": F.lit(snapshot_id),
+                    "input_manifest": F.lit(input_manifest),
+                    "validated_at": F.lit(ts),
+                }
             )
-            # keep metadata reads O(1) for long-lived audit tables: fold
-            # accumulated commit files into a checkpoint once enough pile up
-            if (
-                self.compact_every
-                and len(self.manifest._commit_seqs()) >= self.compact_every
-            ):
-                self.manifest.compact()
-            return
-        violations.write.mode("append").partitionBy("part_id").parquet(
-            self.violations_path
-        )
-        verdicts.write.mode("append").parquet(self.verdicts_path)
+            violations = result.violations.withColumn("run_id", F.lit(run_id))
+            if self.backend == "manifest":
+                self.manifest.commit(
+                    {"violations": violations, "verdicts": verdicts},
+                    meta={
+                        "run_id": run_id,
+                        "rule_version": rule_version,
+                        "snapshot_id": snapshot_id,
+                        "input_manifest": input_manifest,
+                        "validated_at": ts,
+                    },
+                )
+                # keep metadata reads O(1) for long-lived audit tables: fold
+                # accumulated commit files into a checkpoint once enough pile up
+                if (
+                    self.compact_every
+                    and len(self.manifest._commit_seqs()) >= self.compact_every
+                ):
+                    self.manifest.compact()
+                return
+            violations.write.mode("append").partitionBy("part_id").parquet(
+                self.violations_path
+            )
+            verdicts.write.mode("append").parquet(self.verdicts_path)
+        finally:
+            if owned:
+                result.violations.unpersist()
 
 
 def write_report(
@@ -192,6 +208,14 @@ def write_report(
     """
     df = violations.coalesce(coalesce) if coalesce else violations
     df.write.mode("overwrite").option("header", "true").format(fmt).save(path)
+
+
+def _not_in(col: Column, values: list) -> Column:
+    """``col`` is not among ``values``, with NULL matching NULL. Plain
+    ``NOT IN`` (and an anti-join) never matches a NULL ``col``, which
+    would leave a NULL partition pending forever."""
+    keep = ~col.isin([v for v in values if v is not None])
+    return col.isNotNull() & keep if None in values else col.isNull() | keep
 
 
 def run_resumable(
@@ -211,9 +235,12 @@ def run_resumable(
     """Validate only partitions not yet recorded; append to audit.
 
     Returns the number of partitions validated this run (0 = nothing to do).
-    The pending-partition filter is a broadcast anti-join on part_id → Spark
-    prunes the skipped partitions at the scan when the input is partitioned
-    by part_id (partition pruning on the pushed-down IN-set).
+    The part_ids already validated are collected on the driver once (at
+    most one row per input partition) and removed with a static, NULL-safe
+    ``NOT IN`` filter. When the input is a file source partitioned by
+    ``partition_col``, Spark applies that filter as a partition filter, so
+    the scans of every job of the plan skip the validated partitions'
+    files. A NULL partition is recorded once and skipped after that.
 
     Uniqueness remains GLOBAL across resumes: the dup scan always covers the
     full ``docs`` table (doc_id column only), so a duplicate pair straddling
@@ -225,7 +252,8 @@ def run_resumable(
     done = audit.validated_partitions(spark, rule_version, snapshot_id)
     pending = docs
     if done is not None:
-        pending = docs.join(F.broadcast(done), partition_col, "left_anti")
+        done_ids = [r[0] for r in done.collect()]
+        pending = docs.where(_not_in(F.col(partition_col), done_ids))
     if only_partitions is not None:
         pending = pending.where(F.col(partition_col).isin(only_partitions))
 

@@ -14,7 +14,6 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from datavalidation_spark.engine.referential import dangling_media_refs
 from datavalidation_spark.engine.spans import span_rules
 from datavalidation_spark.engine.uniqueness import duplicate_keys
 from datavalidation_spark.rules.core import Rule, annotate

@@ -2,9 +2,17 @@
 
 from __future__ import annotations
 
+import gc
+import re
+
+import pytest
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
+from pyspark.sql.readwriter import DataFrameWriter
 
 from datavalidation_spark.datagen import synth_asset_catalog, synth_documents
+from datavalidation_spark.engine import audit as audit_mod
+from datavalidation_spark.engine.acid import ManifestLog
 from datavalidation_spark.engine.audit import AuditLog, run_resumable, write_report
 from datavalidation_spark.engine.validate import validate_documents
 
@@ -60,3 +68,111 @@ def test_csv_report_sink(spark, tmp_path):
     back = spark.read.option("header", "true").csv(p)
     assert back.count() == res.violations.count()
     assert set(back.columns) == set(res.violations.columns)
+
+
+def test_null_partition_recorded_once(spark, tmp_path):
+    """A NULL part_id is a partition like any other: validated and recorded
+    on the first submit, skipped by every later one (an anti-join or plain
+    NOT IN never matches NULL and would re-validate it forever)."""
+    docs = synth_documents(spark, 400, dirty=True, n_parts=4).withColumn(
+        "part_id", F.when(F.col("part_id") != 3, F.col("part_id"))
+    )
+    d = str(tmp_path / "audit")
+    got = [run_resumable(spark, docs, d, run_id=f"r{i}") for i in range(3)]
+    assert got == [4, 0, 0]
+    verd = AuditLog(d).manifest.read(spark, "verdicts")
+    assert verd.where(F.col("part_id").isNull()).count() == 1
+    committed = AuditLog(d).read_violations(spark).count()
+    assert committed == validate_documents(docs).violations.count()
+
+
+def test_resume_prunes_validated_partitions_at_scan(spark, tmp_path, monkeypatch):
+    """On a part_id-partitioned parquet input the resume submit's file scan
+    carries the validated part_ids as a partition filter, and no anti-join
+    on part_id is left in its plan."""
+    src = str(tmp_path / "docs")
+    synth_documents(spark, 800, dirty=True, n_parts=8).write.partitionBy(
+        "part_id"
+    ).parquet(src)
+    docs = spark.read.parquet(src)
+    d = str(tmp_path / "audit")
+    assert run_resumable(spark, docs, d, run_id="r1", only_partitions=[1, 3, 5]) == 3
+
+    plans = []
+    real = audit_mod.validate_documents
+
+    def spy(pending, **kw):
+        plans.append(pending._jdf.queryExecution().executedPlan().toString())
+        return real(pending, **kw)
+
+    monkeypatch.setattr(audit_mod, "validate_documents", spy)
+    assert run_resumable(spark, docs, d, run_id="r2") == 5
+    (plan,) = plans
+    filters = re.findall(r"PartitionFilters: \[([^\]]*)\]", plan)
+    assert len(filters) == 1
+    (skipped,) = re.findall(r"NOT part_id#\d+ IN \(([^)]*)\)", filters[0])
+    assert sorted(int(p) for p in skipped.split(",")) == [1, 3, 5]
+    assert "LeftAnti" not in plan
+
+
+def _persisted(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+@pytest.mark.parametrize("backend", ["manifest", "parquet"])
+def test_record_scopes_its_violations_cache(spark, tmp_path, monkeypatch, backend):
+    """record reads the violations once for both table writes (they are
+    cached while it runs) and leaves the session's persisted RDDs as it
+    found them: after a commit, after a failed commit, and with the
+    caller's own cache on the violations left in place."""
+    docs = synth_documents(spark, 500, dirty=True, n_parts=4)
+    gc.collect()  # fire pending cache-release finalizers of earlier tests
+    before = _persisted(spark)
+    during = []
+    real_parquet = DataFrameWriter.parquet
+
+    def counting_parquet(self, path, *a, **kw):
+        during.append(_persisted(spark))
+        return real_parquet(self, path, *a, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", counting_parquet)
+    AuditLog(str(tmp_path / "ok"), backend=backend).record(
+        validate_documents(docs), "r1", "v1", "s0", ""
+    )
+    assert len(during) == 2 and during[1] == before + 1
+    assert _persisted(spark) == before
+
+    # the commit fails after both tables were written
+    if backend == "manifest":
+        def boom(self, payload):
+            raise RuntimeError("commit failed")
+
+        monkeypatch.setattr(ManifestLog, "_publish", boom)
+    else:
+        def boom(self, path, *a, **kw):
+            if path.endswith("verdicts"):
+                real_parquet(self, path, *a, **kw)
+                raise RuntimeError("commit failed")
+            return real_parquet(self, path, *a, **kw)
+
+        monkeypatch.setattr(DataFrameWriter, "parquet", boom)
+    with pytest.raises(RuntimeError, match="commit failed"):
+        AuditLog(str(tmp_path / "crash"), backend=backend).record(
+            validate_documents(docs), "r2", "v1", "s0", ""
+        )
+    assert _persisted(spark) == before
+    monkeypatch.undo()
+
+    # a cache the caller holds survives record
+    res = validate_documents(docs)
+    res.violations.persist()
+    try:
+        res.violations.count()
+        AuditLog(str(tmp_path / "caller"), backend=backend).record(
+            res, "r3", "v1", "s0", ""
+        )
+        assert res.violations.storageLevel != StorageLevel.NONE
+        assert _persisted(spark) == before + 1
+    finally:
+        res.violations.unpersist()
+    assert _persisted(spark) == before
