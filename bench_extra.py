@@ -15,7 +15,7 @@ instrumentation the optimization rounds need:
 
 Usage:
   python bench_extra.py --sf-dir /root/testdata/sf1.0 --queries dedup_clusters,maritime_catalog
-  python bench_extra.py --sf-dir /root/testdata/sf0.1 --explain plans/r06 --suffix before
+  python bench_extra.py --sf-dir <sf_dir> --explain plans/<tag> --suffix before
 """
 
 from __future__ import annotations

@@ -4,26 +4,18 @@ The reference's ordered-series checks (lag continuity
 ``fuel_rob_validation.py:61-79``, shift-alignment ``distance_validation.py:59-65``,
 enum-membership of ``event``/``load_type`` ``speed_validation.py:42-46``)
 generalize to per-document span invariants (SURVEY.md W6, §2.5/§2.6 target
-rows). Two implementations with identical semantics:
-
-* **HOF path (default)**: native higher-order functions (``exists`` /
-  ``zip_with`` / ``slice``) — stays in the JVM, no Python worker, array is
-  never exploded so there is NO shuffle and no row blow-up. This is the
-  100 TB path.
-* **pandas-UDF path**: one Arrow-vectorized ``pandas_udf`` evaluating all
-  span rules per batch (BASELINE.json input_hint mandates the engine support
-  vectorized pandas/Arrow UDFs over the spans array; also the parity oracle
-  for the HOF path — tests assert both produce identical fire-vectors).
+rows). The rules are native higher-order functions (``exists`` /
+``zip_with`` / ``slice``): they stay in the JVM, need no Python worker, and
+never explode the array, so there is NO shuffle and no row blow-up. The
+test suite checks them doc-by-doc against an Arrow pandas-UDF oracle.
 """
 
 from __future__ import annotations
 
 import weakref
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, StringType
 
 from datavalidation_spark.datagen import KINDS
 from datavalidation_spark.rules.core import Rule, nv
@@ -140,48 +132,6 @@ def _build_span_rules(spans_col: str | Column) -> list[Rule]:
             where=s.isNotNull() & (F.size(s) > 0),
         ),
     ]
-
-
-# ---------------------------------------------------------------------------
-# pandas-UDF path — Arrow-vectorized; parity oracle for the HOF path.
-# ---------------------------------------------------------------------------
-
-
-@F.pandas_udf(ArrayType(StringType()))
-def span_violations_pandas(spans: pd.Series) -> pd.Series:
-    """Return the list of fired span-rule ids per document.
-
-    Arrow hands the list<struct> column over as a Series of numpy arrays of
-    dicts; the loop is per-document over an Arrow batch (vectorized transport,
-    ~10k docs per invocation) — this is the reference's per-row semantics run
-    batch-at-a-time, used as the independent oracle in tests.
-    """
-    kinds_ok = set(KINDS)
-
-    def check(doc) -> list[str]:
-        fired: list[str] = []
-        if doc is None or len(doc) == 0:
-            return ["DOC-EMPTY"]
-        kinds = [s["kind"] for s in doc]
-        offsets = [s["offset"] for s in doc]
-        if any(k is None or k not in kinds_ok for k in kinds):
-            fired.append("SPAN-KIND-ENUM")
-        mono = all(
-            a is not None and b is not None and b > a
-            for a, b in zip(offsets, offsets[1:])
-        ) and all(o is not None for o in offsets)
-        if not mono:
-            fired.append("SPAN-OFFSET-MONO")
-        broken = any(
-            (s["kind"] == "text" and (s["text"] is None or s["media_ref"] is not None))
-            or (s["kind"] != "text" and (s["media_ref"] is None or s["text"] is not None))
-            for s in doc
-        )
-        if broken:
-            fired.append("SPAN-MUTEX")
-        return fired
-
-    return spans.apply(check)
 
 
 def span_fingerprint(spans_col: str = "spans") -> Column:

@@ -1,8 +1,8 @@
 """End-to-end validation pipeline over the interleaved-document table.
 
 Plan shape (SURVEY.md §4): pruned scan → row-local rule expressions
-(whole-stage codegen, zero Python) → [uniqueness: 2-phase salted agg]
-→ [referential: distinct refs ⟕̸ broadcast catalog] → union violations →
+(whole-stage codegen, zero Python) → [uniqueness: one hash agg on doc_id]
+→ [referential: refs ⟕̸ catalog, then distinct] → union violations →
 per-partition verdict aggregation. Two shuffles total (uniqueness agg,
 verdict agg); the row-local rules add none.
 """
@@ -20,30 +20,6 @@ from datavalidation_spark.rules.core import Rule, annotate
 
 VIOLATION_SCHEMA_COLS = ("doc_id", "part_id", "rule_id", "severity", "remarks")
 
-# static-estimate ceiling for forcing a broadcast join (matches Spark's
-# autoBroadcastJoinThreshold default)
-BROADCAST_THRESHOLD = 10 << 20
-
-
-def _size_aware(df: DataFrame, threshold: int) -> DataFrame:
-    """Leave the broadcast decision to Catalyst + AQE (VERDICT r3 #8).
-
-    History: round 2 hinted unconditionally (an adversarial billion-row
-    side would OOM the executors); round 3 replicated Catalyst's static
-    size check through the private ``_jdf.queryExecution()`` API. Both were
-    redundant: Catalyst's static planning already broadcasts any side whose
-    size estimate fits under ``spark.sql.autoBroadcastJoinThreshold``
-    (scans from file stats, aggregates from conservative child-derived
-    bounds — measured identical decisions on every shape in
-    test_join_strategy.py), and AQE converts a shuffle join to broadcast
-    at runtime when the ACTUAL bytes turn out small. Returning the frame
-    unhinted is therefore both the public-API shape and the adaptive one.
-
-    ``threshold`` is kept for API compatibility; tune the session-level
-    ``spark.sql.autoBroadcastJoinThreshold`` conf to move the cutoff."""
-    return df
-
-
 @dataclass
 class ValidationResult:
     violations: DataFrame  # (doc_id, part_id, rule_id, severity, remarks)
@@ -57,7 +33,6 @@ def validate_documents(
     check_unique: bool = True,
     partition_col: str = "part_id",
     unique_scope: DataFrame | None = None,
-    broadcast_threshold: int = BROADCAST_THRESHOLD,
 ) -> ValidationResult:
     """Run the full span-rule catalog (+ uniqueness + referential) and emit
     violations + per-partition verdicts (BASELINE.json north_rule).
@@ -67,6 +42,11 @@ def validate_documents(
     straddle the validated/pending boundary are still counted; violations
     are attributed only to rows present in ``docs``. The scope scan reads
     only (doc_id) — cheap even when the subset is small.
+
+    Join strategy is left to Catalyst and AQE: a side whose size estimate
+    fits under ``spark.sql.autoBroadcastJoinThreshold`` is broadcast at
+    planning time, and AQE converts a shuffle join at runtime when the
+    actual bytes turn out small. Tune that conf to move the cutoff.
     """
     rules = span_rules("spans") + list(extra_rules or [])
 
@@ -80,7 +60,7 @@ def validate_documents(
 
     if check_unique:
         dups = duplicate_keys(unique_scope if unique_scope is not None else docs, "doc_id")
-        dup_viol = docs.join(_size_aware(dups, broadcast_threshold), "doc_id", "inner").select(
+        dup_viol = docs.join(dups, "doc_id", "inner").select(
             "doc_id",
             F.col(partition_col),
             F.lit("DUP-DOC-ID").alias("rule_id"),
@@ -108,9 +88,7 @@ def validate_documents(
         # ~1% of refs dangle). distinct∘filter ≡ filter∘distinct for a
         # per-row predicate, so the violation set is unchanged.
         dangling = refs.join(
-            _size_aware(asset_catalog.select("media_ref"), broadcast_threshold),
-            "media_ref",
-            "left_anti",
+            asset_catalog.select("media_ref"), "media_ref", "left_anti"
         ).distinct().select(
             "doc_id",
             F.col(partition_col),
@@ -126,20 +104,28 @@ def validate_documents(
     for p in parts[1:]:
         violations = violations.unionByName(p)
 
+    # one aggregate over both per-partition counts instead of a join:
+    # groupBy keeps a NULL partition as one group, where an equi-join on
+    # part_id would drop its violations from its verdict
+    zero = F.lit(0).cast("long")
+    per_part_rows = docs.groupBy(partition_col).agg(
+        F.count(F.lit(1)).alias("row_count"),
+        zero.alias("violation_count"),
+        zero.alias("violating_rows"),
+    )
     per_part_viol = violations.groupBy(partition_col).agg(
+        zero.alias("row_count"),
         F.count(F.lit(1)).alias("violation_count"),
         F.countDistinct("doc_id").alias("violating_rows"),
     )
     verdicts = (
-        docs.groupBy(partition_col)
-        .agg(F.count(F.lit(1)).alias("row_count"))
-        .join(per_part_viol, partition_col, "left")
-        .select(
-            partition_col,
-            "row_count",
-            F.coalesce("violation_count", F.lit(0)).alias("violation_count"),
-            F.coalesce("violating_rows", F.lit(0)).alias("violating_rows"),
-            (F.coalesce("violation_count", F.lit(0)) == 0).alias("passed"),
+        per_part_rows.unionByName(per_part_viol)
+        .groupBy(partition_col)
+        .agg(
+            F.sum("row_count").alias("row_count"),
+            F.sum("violation_count").alias("violation_count"),
+            F.sum("violating_rows").alias("violating_rows"),
         )
+        .withColumn("passed", F.col("violation_count") == 0)
     )
     return ValidationResult(violations=violations, verdicts=verdicts)

@@ -374,29 +374,6 @@ def minhash_lsh_pairs(
 # ---------------------------------------------------------------------------
 
 
-def simhash64_py(toks: list[str] | None) -> int:
-    """Python reference for the md5-family SimHash (test oracle only).
-
-    64-bit token hash = first 16 hex chars of md5(token), big-endian; per-bit
-    votes Σ(2·bit−1) over the token stream (repeats weighted); signature bit
-    set iff votes > 0."""
-    import hashlib
-
-    if not toks:
-        return 0
-    votes = [0] * 64
-    for t in toks:
-        h = int(hashlib.md5(t.encode("utf-8")).hexdigest()[:16], 16)
-        for b in range(64):
-            votes[b] += 1 if (h >> b) & 1 else -1
-    sig = 0
-    for b in range(64):
-        if votes[b] > 0:
-            sig |= 1 << b
-    # store as signed 64-bit (two's complement) to match Spark LongType
-    return sig - (1 << 64) if sig >= (1 << 63) else sig
-
-
 def simhash_signatures(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:

@@ -1,17 +1,18 @@
 """Similarity search over an embedding column (``array<float>``).
 
-* ``cosine_topk``       — exact brute-force top-k: the correctness baseline.
-  Dot products are pure Column math (``zip_with`` + ``aggregate``); the
-  quadratic join is the cost you pay for exactness — only for eval sets.
-* ``lsh_topk``          — random-hyperplane LSH buckets + exact rerank inside
-  buckets (multi-probe over ``n_tables`` independent tables): the scale path,
-  shuffle O(rows·tables), never O(rows²).
-* ``ivf_topk``          — IVF-style: k-means-lite centroids (seeded sample,
-  one refinement pass), probe the ``n_probe`` nearest cells. Centroids are
-  broadcast; the quadratic term becomes rows·centroids.
+* ``cosine_topk``        — exact brute-force top-k, the correctness baseline:
+  the query set is collected and broadcast, and each corpus Arrow batch is
+  scored with one numpy GEMM. Eval-sized query sets only.
+* ``lsh_topk_md5``       — md5-Rademacher LSH buckets + exact rerank over the
+  union of candidates (multi-probe over ``n_tables`` tables): the scale
+  path, shuffle O(rows·tables), never O(rows²).
+* ``ivf_topk``           — IVF-style: sampled centroids with one Lloyd
+  refinement pass, probe the ``n_probe`` nearest cells per query.
+* ``semdedup``           — within-cell cosine near-duplicates (SemDeDup).
 
-Embedding-cosine *near-duplicate* detection = ``cosine_pairs`` with a
-threshold — used by the dedup suite.
+Embedding-cosine *near-duplicate* pairs: ``cosine_pairs_fast`` (exact,
+broadcast corpus — eval scale) and ``lsh_near_dup_pairs`` (LSH blocking +
+in-bucket GEMM — corpus scale).
 """
 
 from __future__ import annotations
@@ -41,33 +42,6 @@ def normalized(df: DataFrame, vec_col: str = "embedding", out: str = "nvec") -> 
     return df.withColumn(out, F.transform(v, lambda x: x / _norm(v)))
 
 
-def cosine_pairs(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    *,
-    threshold: float = 0.9,
-) -> DataFrame:
-    """Exact near-dup pairs with cosine ≥ threshold (brute force)."""
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    n = df.select(
-        F.col(id_col).alias("id"), v.alias("v"), _norm(v).alias("nrm")
-    )
-    cos = F.round(
-        _dot(F.col("a.v"), F.col("b.v")) / (F.col("a.nrm") * F.col("b.nrm")), 6
-    )
-    return (
-        n.alias("a")
-        .join(n.alias("b"), F.col("a.id") < F.col("b.id"))
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            cos.alias("cosine"),
-        )
-        .where(F.col("cosine") >= threshold)
-    )
-
-
 def cosine_pairs_fast(
     df: DataFrame,
     vec_col: str = "embedding",
@@ -78,12 +52,13 @@ def cosine_pairs_fast(
 ) -> DataFrame:
     """Exact near-dup pairs via Arrow-batched numpy GEMM: each partition's
     block multiplies against the broadcast corpus matrix (blocked
-    block-nested-loop join). ~100× the Column-fold path; float sums use
-    blocked matmul, so results are rounded to ``round_dp`` (4) — coarse
+    block-nested-loop join). ~100× a per-pair Column dot fold; float sums
+    use blocked matmul, so results are rounded to ``round_dp`` (4) — coarse
     enough that engine-order float noise (~1e-13) cannot flip a digit.
 
     Eval-scale exact baseline: the corpus side is broadcast whole. At corpus
-    scale, block first (LSH/IVF above) and exact-rerank within blocks.
+    scale, use ``lsh_near_dup_pairs`` (LSH blocking, exact rerank within
+    blocks).
     """
     import pandas as pd
 
@@ -368,91 +343,6 @@ def lsh_topk_md5(
         "query_id",
         "neighbor_id",
         F.round(_dot(qd, cd) / (_norm(qd) * _norm(cd)), 6).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
-
-
-def _hyperplanes(dim: int, n_bits: int, n_tables: int, seed: int) -> np.ndarray:
-    rng = np.random.default_rng(seed)
-    return rng.standard_normal((n_tables, n_bits, dim))
-
-
-def _bucket_expr(vec: Column, planes: np.ndarray) -> Column:
-    """Signature = bit-string of sign(v·h) per hyperplane (Column math)."""
-    bits = []
-    for h in planes:
-        dot = F.aggregate(
-            F.zip_with(
-                vec,
-                F.array(*[F.lit(float(x)) for x in h]),
-                lambda x, y: x * y,
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        bits.append(F.when(dot >= 0, F.lit("1")).otherwise(F.lit("0")))
-    return F.concat(*bits)
-
-
-def lsh_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    *,
-    k: int = 10,
-    n_bits: int = 8,
-    n_tables: int = 4,
-    seed: int = 42,
-    dim: int | None = None,
-) -> DataFrame:
-    """Approximate top-k: random-hyperplane buckets, exact rerank in-bucket.
-
-    Recall grows with n_tables (independent probes unioned before rerank).
-    """
-    if dim is None:
-        dim = _infer_dim(corpus, vec_col)
-        if dim is None:
-            return _empty_result(
-                corpus, "query_id long, neighbor_id long, cosine double, rank int"
-            )
-    planes = _hyperplanes(dim, n_bits, n_tables, seed)
-
-    def with_buckets(df: DataFrame, id_alias: str, vec_alias: str) -> DataFrame:
-        n = normalized(df, vec_col)
-        tagged = n.select(
-            F.col(id_col).alias(id_alias),
-            F.col("nvec").alias(vec_alias),
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(t).alias("table"),
-                            _bucket_expr(F.col("nvec"), planes[t]).alias("bucket"),
-                        )
-                        for t in range(n_tables)
-                    ]
-                )
-            ).alias("tb"),
-        )
-        return tagged.select(id_alias, vec_alias, "tb.table", "tb.bucket")
-
-    qb = with_buckets(queries, "query_id", "qvec")
-    cb = with_buckets(corpus, "neighbor_id", "cvec")
-    cand = (
-        qb.join(cb, ["table", "bucket"])
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    scored = cand.select(
-        "query_id",
-        "neighbor_id",
-        F.round(_dot(F.col("qvec"), F.col("cvec")), 6).alias("cosine"),
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return (

@@ -103,12 +103,6 @@ def within_pct(col: Column, ref: Column, lo: float, hi: float) -> Column:
     return nv(col.between(ref * F.lit(lo), ref * F.lit(hi)))
 
 
-def power_based_consumption(power: Column, hours: Column, factor: float) -> Column:
-    """Max plausible consumption from power: ``factor*p*h/1e6`` if p>0 else NULL
-    (ref ``me_consumption_validation.py:88-89``)."""
-    return F.when(power > 0, F.lit(factor) * power * hours / F.lit(1_000_000.0))
-
-
 def expected_consumption(
     c_speed1: Column,
     c_disp1: Column,

@@ -3,8 +3,7 @@
 The reference is strictly batch (click-driven, ``streamlit_app.py:52``);
 streaming is a target-capability extension: the same rule catalog compiled
 over a ``readStream`` source, violations appended to the audit sink
-continuously, and windowed per-partition verdicts with a watermark for late
-documents.
+continuously.
 
 Because the rules are plain Column expressions, the SAME catalog objects
 compile onto a streaming DataFrame unchanged — zero rule rewrites between
@@ -32,28 +31,6 @@ def stream_violations(
     ann = annotate(stream_df, rules, out="_v")
     return ann.select(*entity_cols, F.explode("_v").alias("_x")).select(
         *entity_cols, "_x.rule_id", "_x.severity", "_x.remarks"
-    )
-
-
-def stream_verdicts(
-    stream_df: DataFrame,
-    ts_col: str,
-    rules: list[Rule] | None = None,
-    partition_col: str = "part_id",
-    window_duration: str = "1 minute",
-    watermark: str = "2 minutes",
-) -> DataFrame:
-    """Windowed per-partition verdicts with late-data watermark: counts of
-    rows/violations per (event-time window, partition)."""
-    rules = rules if rules is not None else span_rules("spans")
-    ann = annotate(stream_df, rules, out="_v").withWatermark(ts_col, watermark)
-    return (
-        ann.groupBy(F.window(ts_col, window_duration), F.col(partition_col))
-        .agg(
-            F.count(F.lit(1)).alias("row_count"),
-            F.sum(F.size("_v")).alias("violation_count"),
-        )
-        .withColumn("passed", F.col("violation_count") == 0)
     )
 
 

@@ -10,14 +10,23 @@ divergences from the literal reference code, matching our engine:
 2. ME-EXPECT is live (the reference gates it on ``isinstance(coeffs, dict)``
    but passes a pandas Series at the call site, ``streamlit_app.py:76``,
    making the physics check dead code — we validate the intended semantics).
+
+The span-rule and SimHash oracles at the end check the engine's JVM paths
+(``engine/spans.py`` higher-order functions, ``operators/dedup.py``
+``simhash_signatures``) against independent per-row Python.
 """
 
 from __future__ import annotations
 
+import hashlib
 import math
 
 import numpy as np
 import pandas as pd
+from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, StringType
+
+from datavalidation_spark.datagen import KINDS
 
 AT_SEA = "NOON AT SEA"
 MANEUVERING = "END OF SEA PASSAGE"
@@ -333,3 +342,66 @@ def oracle_fuel_rob(logs: pd.DataFrame) -> set[tuple]:
                         )
                     )
     return results
+
+
+# ---------------------------------------------------------------------------
+# Span rules: Arrow pandas UDF, parity oracle for the HOF rules in spans.py.
+# ---------------------------------------------------------------------------
+
+
+@F.pandas_udf(ArrayType(StringType()))
+def span_violations_pandas(spans: pd.Series) -> pd.Series:
+    """Return the list of fired span-rule ids per document.
+
+    Arrow hands the list<struct> column over as a Series of numpy arrays of
+    dicts; the loop is per-document over an Arrow batch (vectorized transport,
+    ~10k docs per invocation) — this is the reference's per-row semantics run
+    batch-at-a-time, used as the independent oracle in tests.
+    """
+    kinds_ok = set(KINDS)
+
+    def check(doc) -> list[str]:
+        fired: list[str] = []
+        if doc is None or len(doc) == 0:
+            return ["DOC-EMPTY"]
+        kinds = [s["kind"] for s in doc]
+        offsets = [s["offset"] for s in doc]
+        if any(k is None or k not in kinds_ok for k in kinds):
+            fired.append("SPAN-KIND-ENUM")
+        mono = all(
+            a is not None and b is not None and b > a
+            for a, b in zip(offsets, offsets[1:])
+        ) and all(o is not None for o in offsets)
+        if not mono:
+            fired.append("SPAN-OFFSET-MONO")
+        broken = any(
+            (s["kind"] == "text" and (s["text"] is None or s["media_ref"] is not None))
+            or (s["kind"] != "text" and (s["media_ref"] is None or s["text"] is not None))
+            for s in doc
+        )
+        if broken:
+            fired.append("SPAN-MUTEX")
+        return fired
+
+    return spans.apply(check)
+
+
+def simhash64_py(toks: list[str] | None) -> int:
+    """Python reference for the md5-family SimHash of ``simhash_signatures``.
+
+    64-bit token hash = first 16 hex chars of md5(token), big-endian; per-bit
+    votes Σ(2·bit−1) over the token stream (repeats weighted); signature bit
+    set iff votes > 0."""
+    if not toks:
+        return 0
+    votes = [0] * 64
+    for t in toks:
+        h = int(hashlib.md5(t.encode("utf-8")).hexdigest()[:16], 16)
+        for b in range(64):
+            votes[b] += 1 if (h >> b) & 1 else -1
+    sig = 0
+    for b in range(64):
+        if votes[b] > 0:
+            sig |= 1 << b
+    # store as signed 64-bit (two's complement) to match Spark LongType
+    return sig - (1 << 64) if sig >= (1 << 63) else sig

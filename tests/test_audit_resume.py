@@ -84,6 +84,12 @@ def test_null_partition_recorded_once(spark, tmp_path):
     assert verd.where(F.col("part_id").isNull()).count() == 1
     committed = AuditLog(d).read_violations(spark).count()
     assert committed == validate_documents(docs).violations.count()
+    # the NULL partition's recorded verdict counts its own violations
+    n_null = validate_documents(docs).violations.where(F.col("part_id").isNull()).count()
+    (null_verdict,) = verd.where(F.col("part_id").isNull()).collect()
+    assert n_null > 0
+    assert null_verdict.violation_count == n_null
+    assert not null_verdict.passed
 
 
 def test_resume_prunes_validated_partitions_at_scan(spark, tmp_path, monkeypatch):

@@ -16,12 +16,12 @@ from datavalidation_spark.operators.dedup import (
     simhash_signatures,
 )
 from datavalidation_spark.operators.similarity import (
-    cosine_pairs,
     cosine_pairs_fast,
     cosine_topk,
     ivf_topk,
-    lsh_topk,
+    lsh_topk_md5,
 )
+from tests.reference_oracle import simhash64_py
 
 
 @pytest.fixture(scope="module")
@@ -75,7 +75,6 @@ def test_lsh_empty_input_returns_empty(spark):
     from datavalidation_spark.operators.similarity import (
         _infer_dim,
         lsh_near_dup_pairs,
-        lsh_topk_md5,
     )
 
     empty = spark.createDataFrame([], "vec_id long, embedding array<float>")
@@ -120,8 +119,6 @@ def test_minhash_lsh_agrees_with_exact_jaccard(corpus):
 
 
 def test_simhash_signature_matches_python_reference(spark, corpus):
-    from datavalidation_spark.operators.dedup import simhash64_py
-
     rows = simhash_signatures(corpus.limit(5)).collect()
     sigs = {r.id: r.simhash for r in rows}
     hexes = {r.id: r.simhash_hex for r in rows}
@@ -151,7 +148,7 @@ def vectors(spark):
 
 
 def test_cosine_pairs_finds_planted_near_identical(vectors):
-    pairs = cosine_pairs(vectors, threshold=0.99).collect()
+    pairs = cosine_pairs_fast(vectors, threshold=0.99).collect()
     assert any({r.id_a, r.id_b} == {0, 90001} for r in pairs)
 
 
@@ -194,7 +191,7 @@ def test_lsh_and_ivf_recall(spark, vectors):
         ]
         return float(np.mean(scores))
 
-    r_lsh = recall(lsh_topk(queries, vectors, k=10, n_bits=6, n_tables=8))
+    r_lsh = recall(lsh_topk_md5(queries, vectors, k=10, n_bits=4, n_tables=8))
     r_ivf = recall(ivf_topk(queries, vectors, k=10, n_cells=8, n_probe=4))
     assert r_lsh >= 0.3, r_lsh
     assert r_ivf >= 0.4, r_ivf
@@ -224,8 +221,6 @@ def test_lsh_near_dup_pairs_subset_and_recall(spark):
 def test_lsh_topk_md5_recall(spark):
     """Contract ANN path: recall@5 vs brute force (measured 0.64 at sf0.01
     with 4 bits × 8 tables)."""
-    from datavalidation_spark.operators.similarity import lsh_topk_md5
-
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     queries = emb.where(F.col("vec_id") < 20)
     brute: dict[int, set[int]] = {}

@@ -1,11 +1,12 @@
 """Size-aware join strategy in validate_documents (VERDICT r2 what's-wrong
 #1 / next #3). Round 2 force-broadcast the dup set and the asset catalog
 unconditionally; an adversarial billion-row side would OOM the executors.
-Now the hint is applied only when Catalyst's static size estimate fits
-under the threshold — a huge-by-estimate side keeps the shuffle join (and
-AQE may still convert at runtime when actual bytes are small, which is the
-desired adaptive behavior). Plans are asserted pre-execution, so the huge
-inputs here are lazy and never materialized."""
+Now no hint is given: Catalyst broadcasts a side only when its static size
+estimate fits under ``spark.sql.autoBroadcastJoinThreshold`` — a
+huge-by-estimate side keeps the shuffle join (and AQE may still convert at
+runtime when actual bytes are small, which is the desired adaptive
+behavior). Plans are asserted pre-execution, so the huge inputs here are
+lazy and never materialized."""
 
 from __future__ import annotations
 
@@ -65,13 +66,31 @@ def test_huge_dup_scope_falls_back_to_shuffle_join(spark):
 
 
 def test_join_strategy_does_not_change_results(spark):
+    """Shuffle joins forced through the session conf give the same rows as
+    the default (broadcast) plan."""
     docs = synth_documents(spark, 500, dirty=True)
-    forced = validate_documents(docs, broadcast_threshold=0)   # hint dropped
-    default = validate_documents(docs)                         # hint applied
-    got = sorted(
-        tuple(r) for r in forced.violations.select("doc_id", "rule_id").collect()
+    cat = synth_asset_catalog(spark, 1000)
+    default = validate_documents(docs, asset_catalog=cat)
+    assert "BroadcastHashJoin" in _initial_plan(default.violations)
+    want = sorted((r.doc_id, r.rule_id) for r in default.violations.collect())
+
+    keys = (
+        "spark.sql.autoBroadcastJoinThreshold",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold",
     )
-    want = sorted(
-        tuple(r) for r in default.violations.select("doc_id", "rule_id").collect()
-    )
+    saved = {k: spark.conf.get(k, None) for k in keys}
+    try:
+        for k in keys:
+            spark.conf.set(k, "-1")
+        forced = validate_documents(docs, asset_catalog=cat).violations
+        got = sorted((r.doc_id, r.rule_id) for r in forced.collect())
+        # the executed (AQE final) plan: no runtime conversion to broadcast
+        plan = forced._jdf.queryExecution().executedPlan().toString()
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    assert "BroadcastHashJoin" not in plan
     assert got == want and len(want) > 0

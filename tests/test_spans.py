@@ -10,11 +10,11 @@ from datavalidation_spark.engine.spans import (
     SPAN_RULE_IDS,
     span_fingerprint,
     span_rules,
-    span_violations_pandas,
 )
 from datavalidation_spark.engine.uniqueness import duplicate_keys
 from datavalidation_spark.engine.validate import validate_documents
 from datavalidation_spark.rules.core import annotate
+from tests.reference_oracle import span_violations_pandas
 
 N = 3000
 
