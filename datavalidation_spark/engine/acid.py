@@ -37,6 +37,7 @@ import glob
 import json
 import os
 import uuid
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -72,19 +73,38 @@ class ManifestLog:
 
     def commit(
         self,
-        tables: dict[str, DataFrame],
-        meta: dict | None = None,
+        tables: dict[str, DataFrame | Callable[[dict[str, DataFrame]], DataFrame]],
+        meta: dict | Callable[[], dict] | None = None,
         replace: bool = False,
     ) -> int:
         """Stage every table's data files, then publish them with ONE atomic
         commit-file creation. Returns the commit sequence number.
+
+        A table may be a function instead of a DataFrame. It is called with
+        the tables staged before it (in dict order), each read over its
+        staged files with the schema it was written with, so a table can
+        be derived from another's output without recomputing its plan or
+        running a schema-inference job. ``meta`` may be a function too; it
+        is called once every table is staged, so it can carry counts that
+        were observed during the writes.
 
         ``replace=True`` gives this commit OVERWRITE-SNAPSHOT semantics for
         its tables (Iceberg overwrite vs append): readers see only files
         committed at or after the newest replacing commit. Replaced data
         files stay on disk — ``read_at`` time travel still reaches them
         (removal is an expire-snapshots concern, out of scope)."""
-        files = {name: self._stage(name, df) for name, df in tables.items()}
+        files: dict[str, list[str]] = {}
+        written: dict[str, DataFrame] = {}
+        for name, table in tables.items():
+            if callable(table):
+                table = table({
+                    n: df.sparkSession.read.schema(df.schema).parquet(*files[n])
+                    for n, df in written.items()
+                })
+            files[name] = self._stage(name, table)
+            written[name] = table
+        if callable(meta):
+            meta = meta()
         payload = {"tables": files, "meta": meta or {}}
         if replace:
             payload["replace"] = sorted(tables.keys())

@@ -26,10 +26,14 @@ import os
 import time
 
 from pyspark import StorageLevel
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from datavalidation_spark.engine.validate import ValidationResult, validate_documents
+from datavalidation_spark.engine.validate import (
+    ValidationResult,
+    partition_verdicts,
+    validate_documents,
+)
 
 
 class AuditLog:
@@ -145,56 +149,77 @@ class AuditLog:
         snapshot_id: str,
         input_manifest: str,
         run_ts: float | None = None,
-    ) -> None:
-        """Record verdicts (with lineage) and violations for one run.
+    ) -> int:
+        """Record verdicts (with lineage) and violations for one run and
+        return the number of verdict rows (partitions) written.
 
-        ``result.verdicts`` aggregates ``result.violations``, so the two
-        table writes would each compute the whole validation plan (rules,
-        the global duplicate scan, the referential anti-join). The
-        violations are persisted for the length of the commit and read by
-        both writes, then released; a cache the caller already holds on
+        ``result.verdicts`` aggregates ``result.violations``, so writing
+        both as they are would compute the whole validation plan (rules,
+        the global duplicate scan, the referential anti-join) twice. The
+        manifest backend writes the violations first, rebalanced so AQE
+        sizes the output files from the data, and then aggregates the
+        verdicts from those staged files (read with their known schema)
+        and the docs' per-partition row counts: the plan runs once and
+        nothing is cached. Both tables are published in one commit whose
+        meta carries ``num_partitions`` and ``num_violations``, counted by
+        observations during the two writes, with no extra job.
+
+        The parquet backend appends the violations and then the verdicts
+        (verdicts last, see :meth:`read_violations`) with the violations
+        persisted for the two writes; a cache the caller already holds on
         them is left in place."""
         ts = run_ts if run_ts is not None else time.time()
+        lineage = {
+            "run_id": run_id,
+            "rule_version": rule_version,
+            "snapshot_id": snapshot_id,
+            "input_manifest": input_manifest,
+            "validated_at": ts,
+        }
+        lineage_cols = {k: F.lit(v) for k, v in lineage.items()}
+        n_rows = F.count(F.lit(1)).alias("n")
+        n_violations, n_partitions = Observation(), Observation()
+        violations = result.violations.withColumn("run_id", F.lit(run_id))
+        if self.backend == "manifest":
+            self.manifest.commit(
+                {
+                    "violations": violations.hint("rebalance").observe(
+                        n_violations, n_rows
+                    ),
+                    "verdicts": lambda staged: partition_verdicts(
+                        result.docs, staged["violations"], result.partition_col
+                    )
+                    .withColumns(lineage_cols)
+                    .observe(n_partitions, n_rows),
+                },
+                meta=lambda: {
+                    **lineage,
+                    "num_partitions": n_partitions.get["n"],
+                    "num_violations": n_violations.get["n"],
+                },
+            )
+            # keep metadata reads O(1) for long-lived audit tables: fold
+            # accumulated commit files into a checkpoint once enough pile up
+            if (
+                self.compact_every
+                and len(self.manifest._commit_seqs()) >= self.compact_every
+            ):
+                self.manifest.compact()
+            return n_partitions.get["n"]
         owned = result.violations.storageLevel == StorageLevel.NONE
         if owned:
             result.violations.persist()
         try:
-            verdicts = result.verdicts.withColumns(
-                {
-                    "run_id": F.lit(run_id),
-                    "rule_version": F.lit(rule_version),
-                    "snapshot_id": F.lit(snapshot_id),
-                    "input_manifest": F.lit(input_manifest),
-                    "validated_at": F.lit(ts),
-                }
-            )
-            violations = result.violations.withColumn("run_id", F.lit(run_id))
-            if self.backend == "manifest":
-                self.manifest.commit(
-                    {"violations": violations, "verdicts": verdicts},
-                    meta={
-                        "run_id": run_id,
-                        "rule_version": rule_version,
-                        "snapshot_id": snapshot_id,
-                        "input_manifest": input_manifest,
-                        "validated_at": ts,
-                    },
-                )
-                # keep metadata reads O(1) for long-lived audit tables: fold
-                # accumulated commit files into a checkpoint once enough pile up
-                if (
-                    self.compact_every
-                    and len(self.manifest._commit_seqs()) >= self.compact_every
-                ):
-                    self.manifest.compact()
-                return
             violations.write.mode("append").partitionBy("part_id").parquet(
                 self.violations_path
             )
-            verdicts.write.mode("append").parquet(self.verdicts_path)
+            result.verdicts.withColumns(lineage_cols).observe(
+                n_partitions, n_rows
+            ).write.mode("append").parquet(self.verdicts_path)
         finally:
             if owned:
                 result.violations.unpersist()
+        return n_partitions.get["n"]
 
 
 def write_report(
@@ -234,7 +259,8 @@ def run_resumable(
 ) -> int:
     """Validate only partitions not yet recorded; append to audit.
 
-    Returns the number of partitions validated this run (0 = nothing to do).
+    Returns the number of partitions validated this run (0 = nothing to
+    do), as counted by the commit's verdict write (a NULL partition is one).
     The part_ids already validated are collected on the driver once (at
     most one row per input partition) and removed with a static, NULL-safe
     ``NOT IN`` filter. When the input is a file source partitioned by
@@ -257,8 +283,7 @@ def run_resumable(
     if only_partitions is not None:
         pending = pending.where(F.col(partition_col).isin(only_partitions))
 
-    n_pending = pending.select(partition_col).distinct().count()
-    if n_pending == 0:
+    if pending.isEmpty():
         return 0
 
     result = validate_documents(
@@ -268,5 +293,4 @@ def run_resumable(
         partition_col=partition_col,
         unique_scope=docs,
     )
-    audit.record(result, run_id, rule_version, snapshot_id, input_manifest)
-    return n_pending
+    return audit.record(result, run_id, rule_version, snapshot_id, input_manifest)

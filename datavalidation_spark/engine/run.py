@@ -96,7 +96,18 @@ def main(argv: list[str] | None = None) -> int:
         partition_col=args.partition_col,
         backend=args.backend,
     )
-    print(f"validated_partitions={n} run_id={run_id}")
+    report = f"validated_partitions={n} run_id={run_id}"
+    if args.backend == "manifest":
+        from datavalidation_spark.engine.acid import ManifestLog
+
+        # each commit's meta carries the violation count its write observed
+        committed = sum(
+            meta.get("num_violations", 0)
+            for _, meta in ManifestLog(args.audit).snapshots()
+            if meta.get("run_id") == run_id
+        )
+        report += f" committed_violations={committed}"
+    print(report)
     return 0
 
 

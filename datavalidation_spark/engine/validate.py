@@ -3,8 +3,11 @@
 Plan shape (SURVEY.md §4): pruned scan → row-local rule expressions
 (whole-stage codegen, zero Python) → [uniqueness: one hash agg on doc_id]
 → [referential: refs ⟕̸ catalog, then distinct] → union violations →
-per-partition verdict aggregation. Two shuffles total (uniqueness agg,
-verdict agg); the row-local rules add none.
+per-partition verdict aggregation. The row-local rules add no shuffle.
+With both optional checks the verdicts shuffle five times: the duplicate
+agg, the dangling-ref distinct, the per-partition row-count agg and the
+two levels of the violating-rows ``countDistinct``. The final agg over the
+union of the two counts reuses their ``part_id`` partitioning.
 """
 
 from __future__ import annotations
@@ -23,7 +26,15 @@ VIOLATION_SCHEMA_COLS = ("doc_id", "part_id", "rule_id", "severity", "remarks")
 @dataclass
 class ValidationResult:
     violations: DataFrame  # (doc_id, part_id, rule_id, severity, remarks)
-    verdicts: DataFrame    # (part_id, row_count, violation_count, violating_rows, passed)
+    docs: DataFrame        # the validated input
+    partition_col: str
+
+    @property
+    def verdicts(self) -> DataFrame:
+        """(part_id, row_count, violation_count, violating_rows, passed),
+        planned on access: an audit commit aggregates its staged violation
+        files instead and never needs this plan."""
+        return partition_verdicts(self.docs, self.violations, self.partition_col)
 
 
 def validate_documents(
@@ -104,9 +115,20 @@ def validate_documents(
     for p in parts[1:]:
         violations = violations.unionByName(p)
 
-    # one aggregate over both per-partition counts instead of a join:
-    # groupBy keeps a NULL partition as one group, where an equi-join on
-    # part_id would drop its violations from its verdict
+    return ValidationResult(
+        violations=violations, docs=docs, partition_col=partition_col
+    )
+
+
+def partition_verdicts(
+    docs: DataFrame, violations: DataFrame, partition_col: str
+) -> DataFrame:
+    """Per-partition verdicts: (part_id, row_count, violation_count,
+    violating_rows, passed) from the validated docs and their violations.
+
+    One aggregate over both per-partition counts instead of a join: groupBy
+    keeps a NULL partition as one group, where an equi-join on part_id
+    would drop its violations from its verdict."""
     zero = F.lit(0).cast("long")
     per_part_rows = docs.groupBy(partition_col).agg(
         F.count(F.lit(1)).alias("row_count"),
@@ -118,7 +140,7 @@ def validate_documents(
         F.count(F.lit(1)).alias("violation_count"),
         F.countDistinct("doc_id").alias("violating_rows"),
     )
-    verdicts = (
+    return (
         per_part_rows.unionByName(per_part_viol)
         .groupBy(partition_col)
         .agg(
@@ -128,4 +150,3 @@ def validate_documents(
         )
         .withColumn("passed", F.col("violation_count") == 0)
     )
-    return ValidationResult(violations=violations, verdicts=verdicts)

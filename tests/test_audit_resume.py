@@ -127,25 +127,40 @@ def _persisted(spark) -> int:
 
 @pytest.mark.parametrize("backend", ["manifest", "parquet"])
 def test_record_scopes_its_violations_cache(spark, tmp_path, monkeypatch, backend):
-    """record reads the violations once for both table writes (they are
-    cached while it runs) and leaves the session's persisted RDDs as it
-    found them: after a commit, after a failed commit, and with the
-    caller's own cache on the violations left in place."""
+    """record runs the validation plan once for both table writes and
+    leaves the session's persisted RDDs as it found them: after a commit,
+    after a failed commit, and with the caller's own cache on the
+    violations left in place. The manifest backend persists nothing: its
+    verdict write aggregates the staged violation files, so no rule runs
+    a second time. The parquet backend caches the violations while it
+    writes."""
     docs = synth_documents(spark, 500, dirty=True, n_parts=4)
     gc.collect()  # fire pending cache-release finalizers of earlier tests
     before = _persisted(spark)
     during = []
+    plans = []
     real_parquet = DataFrameWriter.parquet
 
     def counting_parquet(self, path, *a, **kw):
         during.append(_persisted(spark))
+        plans.append(
+            (self._df._jdf.queryExecution().executedPlan().toString(), self._df.inputFiles())
+        )
         return real_parquet(self, path, *a, **kw)
 
     monkeypatch.setattr(DataFrameWriter, "parquet", counting_parquet)
-    AuditLog(str(tmp_path / "ok"), backend=backend).record(
+    ok = str(tmp_path / "ok")
+    AuditLog(ok, backend=backend).record(
         validate_documents(docs), "r1", "v1", "s0", ""
     )
-    assert len(during) == 2 and during[1] == before + 1
+    if backend == "manifest":
+        assert during == [before, before]
+        verdict_plan, verdict_inputs = plans[1]
+        assert verdict_inputs
+        assert all(f.startswith(f"file://{ok}/violations/") for f in verdict_inputs)
+        assert "SPAN-KIND-ENUM" not in verdict_plan
+    else:
+        assert len(during) == 2 and during[1] == before + 1
     assert _persisted(spark) == before
 
     # the commit fails after both tables were written
@@ -182,3 +197,42 @@ def test_record_scopes_its_violations_cache(spark, tmp_path, monkeypatch, backen
     finally:
         res.violations.unpersist()
     assert _persisted(spark) == before
+
+
+def test_commit_files_and_counts(spark, tmp_path):
+    """Each audit commit adds one violations file and one verdicts file on
+    a small input (the violation write is rebalanced, so AQE sizes it from
+    the data), and its meta carries the partition and violation counts it
+    wrote. A commit without violations still records its verdicts."""
+    src = str(tmp_path / "docs")
+    synth_documents(spark, 800, dirty=True, n_parts=8).write.partitionBy(
+        "part_id"
+    ).parquet(src)
+    docs = spark.read.parquet(src)
+    d = str(tmp_path / "audit")
+    audit = AuditLog(d)
+    for i, cap in enumerate([[0, 1, 2], [3, 4], [5, 6, 7]]):
+        files = {t: len(audit.manifest.committed_files(t)) for t in ("violations", "verdicts")}
+        n = run_resumable(spark, docs, d, run_id=f"r{i}", only_partitions=cap)
+        assert n == len(cap)
+        assert {t: len(audit.manifest.committed_files(t)) for t in files} == {
+            t: k + 1 for t, k in files.items()
+        }
+        meta = audit.manifest.snapshots()[-1][1]
+        run = F.col("run_id") == f"r{i}"
+        assert meta["num_partitions"] == n
+        assert meta["num_partitions"] == audit.manifest.read(spark, "verdicts").where(run).count()
+        assert meta["num_violations"] == audit.read_violations(spark).where(run).count()
+        assert meta["num_violations"] > 0
+    metas = [m for _, m in audit.manifest.snapshots()]
+    assert sum(m["num_violations"] for m in metas) == audit.read_violations(spark).count()
+    assert sum(m["num_partitions"] for m in metas) == audit.manifest.read(spark, "verdicts").count()
+
+    clean = str(tmp_path / "clean")
+    clean_docs = synth_documents(spark, 400, dirty=False, n_parts=4)
+    assert run_resumable(spark, clean_docs, clean, run_id="c") == 4
+    clean_audit = AuditLog(clean)
+    assert clean_audit.manifest.snapshots()[-1][1]["num_violations"] == 0
+    assert clean_audit.read_violations(spark).count() == 0
+    verdicts = clean_audit.manifest.read(spark, "verdicts").collect()
+    assert len(verdicts) == 4 and all(v.passed for v in verdicts)

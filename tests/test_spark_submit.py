@@ -6,6 +6,7 @@ assert the partition-resumable contract across two submissions (fresh JVMs
 from __future__ import annotations
 
 import os
+import re
 import shutil
 import subprocess
 import sys
@@ -67,10 +68,12 @@ def test_spark_submit_py_files_resumable(tmp_path):
 
     first = _submit(zpath, audit, "sub1")
     assert "validated_partitions=32 run_id=sub1" in first
+    # the violation count comes from the commit meta
+    assert int(re.search(r"committed_violations=(\d+)", first).group(1)) > 0
 
     # identical resubmission: everything already validated → 0 partitions
     second = _submit(zpath, audit, "sub2")
-    assert "validated_partitions=0 run_id=sub2" in second
+    assert "validated_partitions=0 run_id=sub2 committed_violations=0" in second
 
     for sub in ("verdicts", "violations", "_commits"):
         assert os.path.exists(os.path.join(audit, sub)), sub
